@@ -1,7 +1,9 @@
 package graft
 
+import java.util.concurrent.{CompletableFuture, ExecutionException}
 import scala.collection.concurrent.TrieMap
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import graft.model._
 
 /** Binds a [[SchemaDef]] to concrete DataFrames (the analog of the reference's
@@ -33,10 +35,7 @@ final class CubeCatalog(
     ()
   }
 
-  def rollups: Seq[graft.planner.Rollups.Rollup] = {
-    import scala.jdk.CollectionConverters._
-    rollupReg.asScala.toSeq
-  }
+  def rollups: Seq[graft.planner.Rollups.Rollup] = rollupReg.asScala.toSeq
 
   /** Swap the registered rollup with the same (cube, level-set) identity —
     * the streaming refresh re-registers after every batch swap, because a
@@ -45,7 +44,6 @@ final class CubeCatalog(
     * refreshed rollup the parquet IS the materialization. */
   def replaceRollup(r: graft.planner.Rollups.Rollup,
       cache: Boolean = false): Unit = {
-    import scala.jdk.CollectionConverters._
     rollupReg.asScala
       .filter(x => x.cube == r.cube && x.levels == r.levels)
       .foreach { old =>
@@ -57,140 +55,76 @@ final class CubeCatalog(
     // rows computed from the previous generation are stale for any query
     // that routed (or would now route) to it. Registration-only changes
     // (addRollup) never alter results, but a REPLACEMENT does.
-    resultCache.synchronized(resultCache.clear())
+    memoTable.synchronized(
+      memoTable.keySet.removeIf(_._1 == CubeCatalog.Result))
     ()
   }
 
-  // A7/B9 member-key cache: resolved named-set / TopCount keys, computed once
-  // per catalog (the reference's member-cache analog — /flush drops the whole
-  // catalog, cache included). Keyed by (cube, dim, hierarchy, level, k,
-  // measure); values are the k member keys, driver-side.
-  private val topKCache = TrieMap.empty[(String, String, String, String, Int,
-    String), Seq[Any]]
+  // The catalog memo: every value the catalog computes once and then reuses
+  // (member keys, member frames and domains, collected query results) —
+  // the reference's member and cell caches, and the reason it exposes
+  // /flush at all (api.rb:52-64). One access-ordered LRU of MaxMemoEntries
+  // entries, keyed by (kind, key). A missing key is computed once, OUTSIDE
+  // the table lock: concurrent callers of that key wait for the first
+  // computation, while other keys (including ones a compute looks up
+  // itself) proceed in parallel. A compute that throws stores nothing —
+  // every waiter rethrows the same exception and the next call retries.
+  // Evicted and closed-over values are released (see [[release]]).
+  private val memoTable = new java.util.LinkedHashMap[
+    (CubeCatalog.Memo[_, _], Any), CompletableFuture[Any]](16, 0.75f, true)
+  private var closed = false // guarded by memoTable
 
-  def cachedTopKKeys(key: (String, String, String, String, Int, String))(
-      compute: => Seq[Any]): Seq[Any] =
-    topKCache.getOrElseUpdate(key, compute)
-
-  // TopPercent/TopSum member sets, memoized like TopCount keys (threshold
-  // is part of the identity; absolute distinguishes TOPSUM from TOPPERCENT).
-  // The `within` cuts participate STRUCTURALLY (case-class equality), not
-  // as a string rendering — toString identity can collide across cuts whose
-  // values stringify identically (SetCut(Seq("1")) vs SetCut(Seq(1)))
-  private val topShareCache = TrieMap.empty[
-    (String, graft.planner.TopShareCut, Option[String]), Seq[Any]]
-
-  def cachedTopShareKeys(
-      key: (String, graft.planner.TopShareCut, Option[String]))(
-      compute: => Seq[Any]): Seq[Any] =
-    topShareCache.getOrElseUpdate(key, compute)
-
-  // C9 member-frame cache: the distinct() member list of a level, persisted
-  // on the executors (NOT collected — a 100 TB dimension stays distributed;
-  // the reference caches driver-side member lists, its documented hazard).
-  // Dropped with the catalog on /flush like everything else.
-  private val memberFrameCache =
-    TrieMap.empty[(String, String, Boolean), DataFrame]
-
-  def cachedMemberFrame(key: (String, String, Boolean))(
-      compute: => DataFrame): DataFrame =
-    memberFrameCache.getOrElseUpdate(key, compute.persist())
-
-  // Member-navigation keys (MDX ANCESTOR/.Parent/FirstChild/LastChild/
-  // OPENINGPERIOD/CLOSINGPERIOD): (cube, structural NavCut, role) → the
-  // navigated member's full path keys (root→target — a member's identity
-  // is its path, not its leaf key). The role is part of the identity
-  // because the anchor lookup is member-filtered per role (B18). One
-  // 1-row lookup per distinct navigation per catalog, dropped on /flush
-  // like every member cache.
-  private val navKeyCache =
-    TrieMap.empty[(String, graft.planner.NavCut, Option[String]), Any]
-
-  def cachedNavKey(key: (String, graft.planner.NavCut, Option[String]))(
-      compute: => Any): Any =
-    navKeyCache.getOrElseUpdate(key, compute)
-
-  // COUNT(Members) constants: (cube, level id, role name) → member count
-  // (MDX adhoc-count substitution — Planner.resolveAdhocCounts)
-  private val memberCountCache = TrieMap.empty[(String, String, String), Long]
-
-  def cachedMemberCount(key: (String, String, String))(
-      compute: => Long): Long =
-    memberCountCache.getOrElseUpdate(key, compute)
-
-  // Dense-axis member DOMAINS (Planner.densify): the distinct member frame
-  // of a drilled unit (cut- and role-filtered) plus its row count — the
-  // §7.4 dense-cells guardrail. Memoized per (cube, unit level ids,
-  // structural cuts, role) so the guard's count job runs once per distinct
-  // key per catalog lifetime instead of once per drilled level per QUERY
-  // (the fast-tail driver-job lever). Frames are executor-persisted like
-  // cachedMemberFrame; both drop with the catalog on /flush.
-  private val denseDomainCache = TrieMap.empty[
-    (String, Seq[String], Seq[graft.planner.Cut], String), (DataFrame, Long)]
-
-  def cachedDenseDomain(
-      key: (String, Seq[String], Seq[graft.planner.Cut], String))(
-      compute: => DataFrame): (DataFrame, Long) =
-    denseDomainCache.getOrElseUpdate(key, {
-      val df = compute.persist()
-      (df, df.count())
-    })
-
-  // Lag/cum TIME-MEMBER domains (Planner.lagTimeDomain, cut path): the
-  // needed-member frame is localCheckpoint'ed (it feeds the fact semi-join
-  // AND the axis expansion), which costs an eager job — memoized per
-  // (cube, dim, unit level ids, structural time cuts, lag/lead window,
-  // cum signature, role) so repeated lag-family queries skip it.
-  private val timeDomainCache = TrieMap.empty[
-    (String, String, Seq[String], Seq[graft.planner.Cut], Int, Int,
-      Seq[(String, String)], String), DataFrame]
-
-  def cachedTimeDomain(
-      key: (String, String, Seq[String], Seq[graft.planner.Cut], Int, Int,
-        Seq[(String, String)], String))(
-      compute: => DataFrame): DataFrame =
-    timeDomainCache.getOrElseUpdate(key, compute)
-
-  // QUERY-RESULT cache — the Mondrian cell/segment-cache analog and the
-  // reason the reference exposes /flush at all (api.rb:52-64): repeated
-  // dashboard queries answer from memory without a Spark job. Keyed by the
-  // normalized CubeQuery (a case class — structural equality), values are
-  // the COLLECTED axis rows, which are axis-sized by construction (the
-  // dense-cells guard bounds them), so the LRU-capped driver footprint is
-  // cells × entries. Dropped with the catalog on /flush; access-ordered so
-  // hot dashboards stay resident. Size: spark.graft.result.cache.entries
-  // (0 disables).
-  private val resultCacheMax: Int =
-    spark.conf.getOption("spark.graft.result.cache.entries")
-      .map(_.toInt).getOrElse(256)
-  private val resultCache =
-    new java.util.LinkedHashMap[graft.planner.CubeQuery,
-        (Seq[org.apache.spark.sql.Row], Seq[String])](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[graft.planner.CubeQuery,
-            (Seq[org.apache.spark.sql.Row], Seq[String])]): Boolean =
-        size() > resultCacheMax
-    }
-
-  /** (rows, columns) for a query, computed once per catalog generation.
-    * `compute` runs OUTSIDE the lock (a slow plan must not serialize the
-    * request pool; two racing first callers both compute, one result wins —
-    * plans are deterministic so both are identical). */
-  def cachedResult(q: graft.planner.CubeQuery)(
-      compute: => (Seq[org.apache.spark.sql.Row], Seq[String]))
-      : (Seq[org.apache.spark.sql.Row], Seq[String]) = {
-    if (resultCacheMax <= 0) return compute
-    val hit = resultCache.synchronized(resultCache.get(q))
-    if (hit != null) hit
-    else {
-      val computed = compute
-      resultCache.synchronized {
-        val raced = resultCache.get(q)
-        if (raced != null) raced
-        else { resultCache.put(q, computed); computed }
+  /** The memoized value of `kind` for `key`, running `compute` on a miss. */
+  def memo[K, V](kind: CubeCatalog.Memo[K, V])(key: K)(compute: => V): V = {
+    val k = (kind, key)
+    val mine = new CompletableFuture[Any]
+    val (slot, evicted) = memoTable.synchronized {
+      val hit = memoTable.get(k)
+      if (hit != null) (hit, Nil)
+      else if (closed) (mine, Nil) // computed for this caller only
+      else {
+        memoTable.put(k, mine)
+        // evict the least recently used entries past the cap
+        val it = memoTable.values.iterator
+        (mine, List.fill(memoTable.size - CubeCatalog.MaxMemoEntries) {
+          val eldest = it.next(); it.remove(); eldest
+        })
       }
     }
+    evicted.foreach(release)
+    if (slot ne mine)
+      try slot.get().asInstanceOf[V]
+      catch { case e: ExecutionException => throw e.getCause }
+    else {
+      val v = try compute catch {
+        case e: Throwable =>
+          memoTable.synchronized(memoTable.remove(k, mine))
+          mine.completeExceptionally(e)
+          throw e
+      }
+      mine.complete(v)
+      // evicted while computing, or the catalog closed: keep nothing
+      if (!memoTable.synchronized(memoTable.get(k) eq mine)) release(mine)
+      v
+    }
   }
+
+  private[graft] def memoSize: Int = memoTable.synchronized(memoTable.size)
+
+  /** Release a computed entry's executor state: persisted frames are
+    * unpersisted; for the localCheckpointed time domains this is a no-op
+    * and the context cleaner frees their blocks once unreferenced. */
+  private def release(slot: CompletableFuture[Any]): Unit =
+    if (slot.isDone && !slot.isCompletedExceptionally) slot.join() match {
+      case df: Dataset[_] => df.unpersist(blocking = false)
+      case (df: Dataset[_], _) => df.unpersist(blocking = false)
+      case _ =>
+    }
+
+  /** (rows, columns) for a query, computed once per catalog generation. */
+  def cachedResult(q: graft.planner.CubeQuery)(
+      compute: => (Seq[Row], Seq[String])): (Seq[Row], Seq[String]) =
+    memo(CubeCatalog.Result)(q)(compute)
 
   /** Flattened star frame for a cube — the raw-SQL escape hatch: every
     * level's key (alias), label and ordinal expressions materialized as
@@ -275,30 +209,66 @@ final class CubeCatalog(
     }
   }
 
-  /** Release executor-side state this catalog pinned (persisted member
-    * frames, cached rollups). Without this, /flush would only drop the
-    * TrieMap while Spark's CacheManager kept the InMemoryRelations
-    * registered — canonically-equal plans from the rebuilt catalog would
-    * silently reuse stale cached data. */
+  /** Release executor-side state this catalog pinned (memoized frames,
+    * cached rollups). Without this, /flush would only drop the table while
+    * Spark's CacheManager kept the InMemoryRelations registered —
+    * canonically-equal plans from the rebuilt catalog would silently reuse
+    * stale cached data. */
   def close(): Unit = {
-    memberFrameCache.values.foreach(_.unpersist(blocking = false))
-    memberFrameCache.clear()
-    denseDomainCache.values.foreach(_._1.unpersist(blocking = false))
-    denseDomainCache.clear()
-    // time-domain frames are localCheckpoint'ed RDD state, released by the
-    // context cleaner once the map no longer references them
-    timeDomainCache.clear()
+    val slots = memoTable.synchronized {
+      closed = true
+      val all = memoTable.values.asScala.toList
+      memoTable.clear()
+      all
+    }
+    slots.foreach(release)
     rollups.foreach(_.df.unpersist(blocking = false))
     rollupReg.clear()
-    topKCache.clear()
-    topShareCache.clear()
-    memberCountCache.clear()
-    navKeyCache.clear()
-    resultCache.synchronized(resultCache.clear())
   }
 }
 
 object CubeCatalog {
+  import graft.planner.{CubeQuery, Cut, NavCut, TopShareCut}
+
+  /** Entry cap of the catalog memo (formerly the result cache's default). */
+  val MaxMemoEntries = 256
+
+  /** A kind of catalog memo entry, fixing its key and value types. Kinds
+    * are distinct objects, so entries of two kinds never collide even when
+    * their key tuples have the same shape. Cuts take part in keys
+    * STRUCTURALLY (case-class equality), never as strings, which collide
+    * across cuts that stringify alike (SetCut(Seq("1")) vs SetCut(Seq(1))).
+    * A role is part of any key whose lookup is member-filtered per role. */
+  sealed abstract class Memo[K, V]
+  /** TopCount / named-set member keys: (cube, dim, hierarchy, level,
+    * ±k, measure|role) → the k keys, driver-side. */
+  case object TopKKeys
+      extends Memo[(String, String, String, String, Int, String), Seq[Any]]
+  /** TopPercent/TopSum member sets: (cube, cut, role) → keys. */
+  case object TopShareKeys
+      extends Memo[(String, TopShareCut, Option[String]), Seq[Any]]
+  /** A level's distinct member list, persisted on the executors (NOT
+    * collected — a large dimension stays distributed): (cube, level path,
+    * with properties) → frame. */
+  case object MemberFrame extends Memo[(String, String, Boolean), DataFrame]
+  /** MDX member navigation (ANCESTOR/.Parent/FirstChild/...): (cube, cut,
+    * role) → the navigated member's root→target path keys. */
+  case object NavKey extends Memo[(String, NavCut, Option[String]), Any]
+  /** COUNT(Members) constants and member pins: (cube, level, role) → n. */
+  case object MemberCount extends Memo[(String, String, String), Long]
+  /** Dense-axis member domains (Planner.densify), persisted, with their
+    * row count — the dense-cells guardrail: (cube, unit levels, cuts,
+    * role) → (frame, count). */
+  case object DenseDomain
+      extends Memo[(String, Seq[String], Seq[Cut], String), (DataFrame, Long)]
+  /** Lag/cum time-member domains (Planner.lagTimeDomain), localCheckpointed:
+    * (cube, dim, unit levels, cuts, lag, lead, cum signature, role). */
+  case object TimeDomain extends Memo[(String, String, Seq[String], Seq[Cut],
+    Int, Int, Seq[(String, String)], String), DataFrame]
+  /** Collected query results, keyed by the normalized query: axis-sized
+    * rows (the dense-cells guard bounds them) and their columns. */
+  case object Result extends Memo[CubeQuery, (Seq[Row], Seq[String])]
+
   // One catalog per (session, data dir) — dims stay registered across queries,
   // the analog of the reference's schema/member cache (api_helpers.rb:10-16).
   private val cache = TrieMap.empty[(SparkSession, String), CubeCatalog]

@@ -140,7 +140,7 @@ final class Server(spark: SparkSession, sfDir: String, port: Int,
       params.get("__rolehdr")).flatMap(_.headOption))
 
   private def cube(cat: CubeCatalog, name: String,
-      role: Option[RoleSet] = None): CubeDef = {
+      role: Option[RoleSet]): CubeDef = {
     role.foreach(Roles.checkCubeAccess(_, name))
     Planner.anchorCube(cat,
       if (cat.schema.cube(name).nonEmpty ||

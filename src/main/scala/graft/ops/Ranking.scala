@@ -48,13 +48,11 @@ object Ranking {
     * holds the smallest values), so the bucket id doubles as the bucket's
     * sort key.
     *
-    * The INPUT persists LAZILY: `repartitionByRange` executes its child
-    * twice (the RangePartitioner's sample sketch, then the real shuffle),
-    * but those two passes are SERIAL — the sample job materializes the
-    * cache, the shuffle map stage reads blocks — so a lazy persist gives
-    * compute-once without the eager materialization job the r16 shape
-    * paid. Skipped entirely when the input is just narrow ops over an
-    * already-materialized scan (see the inline note).
+    * The INPUT is an eager localCheckpoint: `repartitionByRange` executes
+    * its child twice (the RangePartitioner's sample sketch, then the real
+    * shuffle), so the input is materialized once first. A lazy persist
+    * measured slower here. Skipped entirely when the input is just narrow
+    * ops over an already-materialized scan (see the inline note).
     *
     * The BUCKETED frame stays an EAGER localCheckpoint, for two reasons.
     * Compute-once here is CORRECTNESS, not tuning: it feeds BOTH the
@@ -83,9 +81,10 @@ object Ranking {
     * path with AQE + coalescing forced on and a 1-byte advisory size. */
   private[graft] def withRangeBuckets(df: DataFrame, n: Int,
       keys: Seq[Column]): DataFrame = {
-    // Skip the input persist when the frame is just narrow ops over an
-    // already-materialized scan (a checkpoint's LogicalRDD or a cached
-    // relation): the sample pass re-reads those blocks anyway, and a
+    // Skip the input checkpoint when the frame is just narrow ops over an
+    // already-materialized scan (a checkpoint's LogicalRDD; cached relations
+    // are substituted after analysis, so the analyzed plan never shows
+    // one): the sample pass re-reads those blocks anyway, and a
     // second stored copy of a trivially-recomputable projection is pure
     // memory cost (callers like the difficulty/DSIR pipelines feed
     // checkpointed scoring frames).
@@ -98,7 +97,6 @@ object Ranking {
         case s: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
           materialized(s.child)
         case _: org.apache.spark.sql.execution.LogicalRDD => true
-        case _: org.apache.spark.sql.execution.columnar.InMemoryRelation => true
         case _ => false
       }
     val in = if (materialized(df.queryExecution.analyzed)) df

@@ -701,7 +701,7 @@ object MdxParser {
         val ref = QueryParser.segments(mm.group(1)) match {
           case Seq(d, l) => LevelRef(d, Some(l))
           case Seq(d, h, l) => LevelRef(d, Some(l), Some(h))
-          case other => GraftException.badRequest(
+          case _ => GraftException.badRequest(
             s"bad COUNT member set '${mm.group(1)}'")
         }
         Planner.resolve(cube, ref) // 400s on unknown paths at parse time
@@ -1465,7 +1465,7 @@ object MdxParser {
       val cut = QueryParser.parseCut(cube, s"($t)")
       cut match {
         case RangeCut(level, _, _) => (Seq(LevelDrill(level)), Seq(cut))
-        case other => GraftException.badRequest(s"bad member range '$t'")
+        case _ => GraftException.badRequest(s"bad member range '$t'")
       }
     } else if (upper.endsWith(".CHILDREN")) {
       // member.Children → drill the NEXT level, cut on the member
@@ -1479,7 +1479,7 @@ object MdxParser {
               s"'$memberPath' is a leaf member — no children"))
           (Seq(LevelDrill(LevelRef(rl.dim.name, Some(child.name),
             Some(rl.hier.name)))), Seq(cut))
-        case other =>
+        case _ =>
           GraftException.badRequest(s"bad member for .Children: '$memberPath'")
       }
     } else if (upper.startsWith("DESCENDANTS(") && t.endsWith(")")) {
@@ -1563,7 +1563,7 @@ object MdxParser {
         val cut = QueryParser.parseCut(cube, t)
         cut match {
           case SetCut(level, _) => (Seq(LevelDrill(level)), Seq(cut))
-          case other => GraftException.badRequest(s"unsupported set literal '$t'")
+          case _ => GraftException.badRequest(s"unsupported set literal '$t'")
         }
       }
     } else if (upper.endsWith(".MEMBERS")) {

@@ -61,7 +61,7 @@ object Planner {
       val subst = q.adhocCounts.map { case (alias, ref) =>
         val rl = resolve(cube, ref)
         rs.foreach(Roles.validateLevels(_, cube, Seq(rl)))
-        val n = cat.cachedMemberCount((cube.name,
+        val n = cat.memo(CubeCatalog.MemberCount)((cube.name,
           s"${rl.dim.name}.${rl.hier.name}.${rl.level.name}",
           rs.map(_.name).getOrElse(""))) {
           graft.result.Metadata.levelMembersDf(cat, cube, ref,
@@ -168,7 +168,7 @@ object Planner {
     * levels when parents=true) — used by the result formatters. */
   def axisLevels(cube: CubeDef, q: CubeQuery): Seq[ResolvedLevel] = {
     val (drills, _) = expandDrills(cube, q.drilldowns)
-    groupLevelList(cube, drills, q.parents)
+    groupLevelList(drills, q.parents)
   }
 
   /** Anchor cube for layout purposes (virtual cubes anchor on their first
@@ -287,7 +287,7 @@ object Planner {
     // per coarser row), and non-decomposable aggregates under a combine
     // (median / distinct-count can't be merged from descendant cells
     // without a second fact pass).
-    val groupLevels = groupLevelList(cube, drills, q.parents)
+    val groupLevels = groupLevelList(drills, q.parents)
     val pinnedPlans: Seq[PlannedPin] = need.pinned.map { pm =>
       val rps = pm.pins.map { ps =>
         val rl = resolvePinnedLevel(cat, cube, ps)
@@ -550,7 +550,7 @@ object Planner {
         // non-time drilled levels) × (∏ member counts of the time unit) ≥
         // axis-distinct × |dom| for every time domain (member listings
         // are dim-table-sized, counted once per catalog lifetime —
-        // cachedMemberCount, the COUNT(Members) cache). Under the cap —
+        // the MemberCount memo, the COUNT(Members) cache). Under the cap —
         // every sane query — the expansion runs the plain path: zero
         // extra jobs, no checkpoint, plan lineage intact (rollup routing
         // stays visible to plan inspection). Only a query whose BOUND
@@ -558,7 +558,7 @@ object Planner {
         // check: checkpoint the agg once, count the actual axis-distinct,
         // and 400 if the real product still exceeds the cap.
         def memberCountOf(rl: ResolvedLevel): Long =
-          cat.cachedMemberCount((cube.name,
+          cat.memo(CubeCatalog.MemberCount)((cube.name,
             s"${rl.dim.name}.${rl.hier.name}.${rl.level.name}", "")) {
             graft.result.Metadata.levelMembersDf(cat, cube,
               LevelRef(rl.dim.name, Some(rl.level.name),
@@ -605,10 +605,10 @@ object Planner {
         }
       }
     val withLags = need.lags.foldLeft(expanded) { (df, lm) =>
-      applyLag(cube, df, lm, drills, groupLevels)
+      applyLag(df, lm, drills, groupLevels)
     }
     val withCums = need.cums.foldLeft(withLags) { (df, cm) =>
-      applyCum(cube, df, cm, drills, groupLevels)
+      applyCum(df, cm, drills, groupLevels)
     }
     val withMovings = need.movings.foldLeft(withCums) { (df, mm) =>
       applyMoving(df, mm, drills, groupLevels)
@@ -774,7 +774,7 @@ object Planner {
         q.properties.map(p => propAlias(cube, p)) ++
         q.captions.map(p => captionOverrideAlias(resolve(cube, p.level))) ++
         measureNames.map(aliasOfMeasure(cube, _))
-    finishAxis(cat, cube, tupleFiltered, q, drills, groupLevels, outputCols)
+    finishAxis(cube, tupleFiltered, q, drills, groupLevels, outputCols)
   }
 
   // ------------------------------------------------------------ virtual cube
@@ -846,7 +846,7 @@ object Planner {
 
     val cube0 = cat.cube(vc.cubeMeasures.head._1)
     val drills = q.drilldowns.collect { case LevelDrill(r) => resolve(cube0, r) }
-    val groupLevels = groupLevelList(cube0, drills, q.parents)
+    val groupLevels = groupLevelList(drills, q.parents)
     val axisCols = groupLevels.flatMap(outputAliases)
     val merged = parts.reduce { (l, r) =>
       if (axisCols.isEmpty) l.crossJoin(r)
@@ -858,7 +858,7 @@ object Planner {
     val havingDf = q.filters.foldLeft(withCalcs) { (df, f) =>
       df.filter(comparison(col(f.measure), f.op, f.value))
     }
-    finishAxis(cat, cube0, havingDf, q, drills, groupLevels,
+    finishAxis(cube0, havingDf, q, drills, groupLevels,
       axisCols ++ requested)
   }
 
@@ -1136,7 +1136,7 @@ object Planner {
         .getOrElse(cat.fact(cube))
       val hit = hiers.iterator.flatMap(h => h.levels.iterator.map(h -> _))
         .find { case (h, l) =>
-          cat.cachedMemberCount((cube.name,
+          cat.memo(CubeCatalog.MemberCount)((cube.name,
               s"__pin:${pm.dim}.${h.name}.${l.name}", pm.key.toString)) {
             // a key whose type cannot compare against this level's column
             // (ANSI cast failure: 'Allentown' vs an int key) is simply not
@@ -1365,7 +1365,7 @@ object Planner {
     * TopCount's IN-list (never a per-query semi-join). */
   private def navPathKeys(cat: CubeCatalog, cube: CubeDef,
       c: NavCut, role: Option[String]): Seq[Any] =
-    cat.cachedNavKey((cube.name, c, role)) {
+    cat.memo(CubeCatalog.NavKey)((cube.name, c, role)) {
       val mRl = resolve(cube, c.of)
       val tRl = resolve(cube, c.target)
       // B18: the ANCHOR member's level needs the same role checks as the
@@ -1443,13 +1443,14 @@ object Planner {
     * every query. */
   private def topKKeyValues(cat: CubeCatalog, cube: CubeDef, rl: ResolvedLevel,
       k: Int, byMeasure: String, asc: Boolean = false,
-      role: Option[String] = None): Seq[Any] =
+      role: Option[String]): Seq[Any] =
     // the role is part of the set identity: Mondrian evaluates named sets
     // against the role's schema reader, so TopCount over a restricted
     // hierarchy ranks only VISIBLE members (an invisible member must not
     // consume a top-k slot and shrink the visible result below k)
-    cat.cachedTopKKeys((cube.name, rl.dim.name, rl.hier.name, rl.level.name,
-      if (asc) -k else k, byMeasure + role.fold("")("|role=" + _))) {
+    cat.memo(CubeCatalog.TopKKeys)((cube.name, rl.dim.name, rl.hier.name,
+      rl.level.name, if (asc) -k else k,
+      byMeasure + role.fold("")("|role=" + _))) {
       topKKeys(cat, cube, rl, k, byMeasure, asc, role)
         .collect().toSeq.map(_.get(0))
     }
@@ -1464,7 +1465,7 @@ object Planner {
       rl: ResolvedLevel, ts: TopShareCut,
       role: Option[String]): Seq[Any] = {
     import ts.{threshold, byMeasure, absolute, within}
-    cat.cachedTopShareKeys((cube.name, ts, role)) {
+    cat.memo(CubeCatalog.TopShareKeys)((cube.name, ts, role)) {
       if (threshold <= 0)
         GraftException.badRequest(
           s"TopPercent/TopSum threshold must be positive, got $threshold")
@@ -1521,7 +1522,7 @@ object Planner {
   /** Levels emitted per drilldown: just the level, or the full ancestor chain
     * when `parents=true` (ref C3 — ancestors are sibling columns of the same
     * dim row, no extra join). Deduped by alias, drill order preserved. */
-  private def groupLevelList(cube: CubeDef, drills: Seq[ResolvedLevel],
+  private def groupLevelList(drills: Seq[ResolvedLevel],
       parents: Boolean): Seq[ResolvedLevel] = {
     val ls = drills.flatMap { rl =>
       if (parents)
@@ -1622,7 +1623,7 @@ object Planner {
     val cumSig = need.cums.filter(_.timeDim == dn)
       .filter(cm => unit.exists(_.level.name == cm.resetLevel))
       .map(cm => (cm.resetLevel, cm.edge)).distinct.sorted
-    val dom = cat.cachedTimeDomain((cube.name, dn,
+    val dom = cat.memo(CubeCatalog.TimeDomain)((cube.name, dn,
         unit.map(rl => s"${rl.hier.name}.${rl.level.name}"),
         dimCuts, maxLag, maxLead, cumSig, role.getOrElse(""))) {
       val flag = "__cut_" + dn
@@ -1680,7 +1681,7 @@ object Planner {
     * (ParallelPeriod navigates sibling POSITIONS in the materialized
     * hierarchy, not key arithmetic — a year with missing members shifts
     * both engines identically). */
-  private def applyLag(cube: CubeDef, df: DataFrame, lm: LagMeasureDef,
+  private def applyLag(df: DataFrame, lm: LagMeasureDef,
       drills: Seq[ResolvedLevel], groupLevels: Seq[ResolvedLevel]): DataFrame = {
     val timeDrills = drills.filter(_.dim.name == lm.timeDim).sortBy(_.depth)
     if (timeDrills.isEmpty)
@@ -1709,7 +1710,7 @@ object Planner {
     * Runs over the domain-expanded frame like [[applyLag]]: members cut
     * from the axis still contribute to the running sum (PeriodsToDate
     * accumulates from the period start, not the axis set). */
-  private def applyCum(cube: CubeDef, df: DataFrame, cm: CumMeasureDef,
+  private def applyCum(df: DataFrame, cm: CumMeasureDef,
       drills: Seq[ResolvedLevel], groupLevels: Seq[ResolvedLevel]): DataFrame = {
     val timeDrills = drills.filter(_.dim.name == cm.timeDim).sortBy(_.depth)
     if (timeDrills.isEmpty)
@@ -1918,8 +1919,8 @@ object Planner {
   private def densify(cat: CubeCatalog, cube: CubeDef, aggDf: DataFrame,
       drills: Seq[ResolvedLevel], groupLevels: Seq[ResolvedLevel],
       cuts: Seq[Cut], parents: Boolean,
-      roleGrants: Seq[Roles.DimGrant] = Nil,
-      role: Option[String] = None): DataFrame = {
+      roleGrants: Seq[Roles.DimGrant],
+      role: Option[String]): DataFrame = {
     if (drills.isEmpty) return aggDf
     // one domain per drilled level — or, with parents=true, one per drilled
     // DIMENSION carrying the full ancestor chain (ancestor columns live on
@@ -1939,7 +1940,7 @@ object Planner {
       val rl = unit.head
       val dimCuts = cuts.filter(c =>
         levelOfCut(cube, c).exists(_.dim.name == rl.dim.name))
-      cat.cachedDenseDomain((cube.name,
+      cat.memo(CubeCatalog.DenseDomain)((cube.name,
         unit.map(u => s"${u.dim.name}.${u.hier.name}.${u.level.name}"),
         dimCuts, role.getOrElse(""))) {
         val src = rl.dim.join match {
@@ -1953,7 +1954,9 @@ object Planner {
         val roleSrc = roleGrants.find(g => g.restricts &&
             g.dim.name == rl.dim.name && g.hier.name == rl.hier.name)
           .map(g => cutSrc.filter(g.visibleCol)).getOrElse(cutSrc)
-        roleSrc.select(unit.flatMap(levelCols): _*).distinct()
+        val dom = roleSrc.select(unit.flatMap(levelCols): _*).distinct()
+          .persist()
+        (dom, dom.count())
       }
     }
     // Guardrail for §7.4 dragon 1: the cross product of member domains is
@@ -1998,7 +2001,7 @@ object Planner {
     * (query_helper.rb:278-296). A deterministic total order is always
     * established (explicit order first, then the hierarchical member order of
     * every axis column) so SUBSET pagination is stable (§7.4 dragon 5). */
-  private def finishAxis(cat: CubeCatalog, cube: CubeDef, df: DataFrame,
+  private def finishAxis(cube: CubeDef, df: DataFrame,
       q: CubeQuery, drills: Seq[ResolvedLevel],
       groupLevels: Seq[ResolvedLevel], outputCols: Seq[String]): DataFrame = {
     val defaultSort: Seq[Column] = groupLevels.map { rl =>

@@ -71,7 +71,7 @@ object QueryParser {
 
   /** Member path → (LevelRef, key). 3 segs = Dim.Level.key,
     * 4 segs = Dim.Hierarchy.Level.key. */
-  private def memberPath(cube: CubeDef, s: String): (LevelRef, Any) = {
+  private def memberPath(s: String): (LevelRef, Any) = {
     val segs = segments(s)
     segs match {
       case Seq(d, l, k) => (LevelRef(d, Some(l)), typedKey(k))
@@ -90,7 +90,7 @@ object QueryParser {
         GraftException.badRequest(s"unterminated set cut '$s'")
       val parts = splitTop(s.substring(1, s.length - 1), ',')
       if (parts.isEmpty) GraftException.badRequest(s"empty set cut '$s'")
-      val members = parts.map(p => memberPath(cube, p.trim))
+      val members = parts.map(p => memberPath(p.trim))
       val levels = members.map(_._1).distinct
       if (levels.length != 1)
         GraftException.badRequest(
@@ -99,8 +99,8 @@ object QueryParser {
     } else if (s.startsWith("(") && s.endsWith(")") && splitTop(
         s.substring(1, s.length - 1), ':').length == 2) {
       val Seq(lo, hi) = splitTop(s.substring(1, s.length - 1), ':').toSeq
-      val (ll, lk) = memberPath(cube, lo.trim)
-      val (rl, rk) = memberPath(cube, hi.trim)
+      val (ll, lk) = memberPath(lo.trim)
+      val (rl, rk) = memberPath(hi.trim)
       if (ll != rl)
         GraftException.badRequest(
           s"range cut endpoints must share one level: '$s'")
@@ -110,7 +110,7 @@ object QueryParser {
       if (segs.length == 1 && cube.namedSet(segs.head).nonEmpty)
         NamedSetCut(segs.head)
       else {
-        val (l, k) = memberPath(cube, s)
+        val (l, k) = memberPath(s)
         MemberCut(l, k)
       }
     }

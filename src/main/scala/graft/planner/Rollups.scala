@@ -375,7 +375,7 @@ object Rollups {
       dim <- cube.dimensions
       hier <- dim.hierarchies
       deepest <- hier.levels.zipWithIndex.reverse.collectFirst {
-        case (l, i) if aliases.contains(l.alias) =>
+        case (l, _) if aliases.contains(l.alias) =>
           LevelRef(dim.name, Some(l.name), Some(hier.name))
       }
     } yield deepest).distinct

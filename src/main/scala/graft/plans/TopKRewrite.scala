@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute,
   EqualTo, Expression, IntegerLiteral, LessThan, LessThanOrEqual, NamedExpression,
-  RowNumber, SortOrder, WindowExpression}
+  RowNumber, WindowExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan,
   Project, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -46,7 +46,7 @@ object TopKRewrite extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case f @ Filter(cond,
-        Window(Seq(a @ Alias(WindowExpression(_: RowNumber, spec), _)),
+        Window(Seq(a @ Alias(WindowExpression(_: RowNumber, _), _)),
           partitionSpec, orderSpec, child, _))
         if partitionSpec.nonEmpty && orderSpec.nonEmpty =>
       boundOf(cond, a.toAttribute) match {

@@ -4,7 +4,6 @@ import scala.collection.immutable.ListMap
 import scala.collection.mutable
 import org.apache.spark.sql.Row
 import graft.CubeCatalog
-import graft.model._
 import graft.planner._
 
 /** The aggregation JSON document — analog of the reference's Result#to_h

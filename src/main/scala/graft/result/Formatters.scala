@@ -108,37 +108,4 @@ object Formatters {
     else
       Json.write(t.rows.map(r =>
         scala.collection.immutable.ListMap(t.headers.zip(r): _*)))
-
-  /** SpreadsheetML 2003 (the XML workbook dialect) — kept as an alternative
-    * export; the `.xls` HTTP endpoints serve real binary BIFF8 via [[Biff]]
-    * (ref C8 excel.rb emits binary through writeexcel). Numbers are typed
-    * cells; nulls are empty cells; text is XML-escaped. */
-  def xmlSpreadsheet(t: Tidy): String = {
-    val sb = new StringBuilder
-    def esc(s: String): String = s.flatMap {
-      case '<' => "&lt;"
-      case '>' => "&gt;"
-      case '&' => "&amp;"
-      case '"' => "&quot;"
-      case c => c.toString
-    }
-    def cell(v: Any): String = v match {
-      case null => "<Cell/>"
-      case n @ (_: java.lang.Double | _: java.lang.Float | _: java.lang.Long |
-          _: java.lang.Integer | _: java.lang.Short | _: java.lang.Byte |
-          _: java.math.BigDecimal) =>
-        s"""<Cell><Data ss:Type="Number">$n</Data></Cell>"""
-      case other =>
-        s"""<Cell><Data ss:Type="String">${esc(String.valueOf(other))}</Data></Cell>"""
-    }
-    sb.append("""<?xml version="1.0"?>""").append('\n')
-      .append("""<?mso-application progid="Excel.Sheet"?>""").append('\n')
-      .append("""<Workbook xmlns="urn:schemas-microsoft-com:office:spreadsheet" xmlns:ss="urn:schemas-microsoft-com:office:spreadsheet">""")
-      .append("""<Worksheet ss:Name="aggregation"><Table>""").append('\n')
-    sb.append(t.headers.map(h => cell(h)).mkString("<Row>", "", "</Row>\n"))
-    t.rows.foreach(r =>
-      sb.append(r.map(cell).mkString("<Row>", "", "</Row>\n")))
-    sb.append("</Table></Worksheet></Workbook>")
-    sb.toString()
-  }
 }

@@ -109,9 +109,9 @@ object Metadata {
       // SOURCE, so paging/ordering see only visible members
       case Some(f) => levelMembersDfUncached(cat, cube, rl, withProps,
         Some(f))
-      case None => cat.cachedMemberFrame((cube.name,
+      case None => cat.memo(CubeCatalog.MemberFrame)((cube.name,
         s"${rl.dim.name}.${rl.hier.name}.${rl.level.name}", withProps)) {
-        levelMembersDfUncached(cat, cube, rl, withProps)
+        levelMembersDfUncached(cat, cube, rl, withProps).persist()
       }
     }
   }
@@ -201,7 +201,7 @@ object Metadata {
         return None
     }
     val chain = rl.hier.levels.take(rl.depth + 1)
-    val detail = cat.cachedMemberFrame((cube.name,
+    val detail = cat.memo(CubeCatalog.MemberFrame)((cube.name,
       s"${rl.dim.name}.${rl.hier.name}.${rl.level.name}.__detail", false)) {
       val src = rl.dim.join match {
         case Some(js) => cat.table(js.table)
@@ -209,7 +209,7 @@ object Metadata {
       }
       val cols = chain.flatMap(l => Seq(expr(l.keyExpr).as(s"${l.alias}__k"),
         expr(l.nameExpr.getOrElse(l.keyExpr)).as(s"${l.alias}__c")))
-      rl.hier.levels.lift(rl.depth + 1) match {
+      val members = rl.hier.levels.lift(rl.depth + 1) match {
         case Some(childLevel) =>
           src.groupBy(cols: _*)
             .agg(countDistinct(expr(childLevel.keyExpr))
@@ -218,6 +218,7 @@ object Metadata {
           src.select(cols: _*).distinct()
             .withColumn("__num_children", lit(0L))
       }
+      members.persist()
     }
     // plain collect (not limit(1)): the filter leaves at most a handful of
     // rows, and executeTake's incremental partition scans would cost 1-3 jobs

@@ -23,10 +23,6 @@ import graft.result.Json
   */
 object SchemaLoader {
 
-  def loadFile(spark: SparkSession, path: String): CubeCatalog =
-    load(spark, new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8))
-
   /** Bind a Mondrian XML catalog (ref spec/fixtures/foodmart.xml grammar —
     * see [[MondrianXml]] for the element map) to concrete DataFrames: the
     * migration path for an existing mondrian-rest user. `tables` supplies
@@ -39,12 +35,6 @@ object SchemaLoader {
     val parsed = MondrianXml.parse(xmlText)
     bindXml(spark, parsed, tables)
   }
-
-  def loadXmlFile(spark: SparkSession, path: String,
-      tables: Map[String, DataFrame]): CubeCatalog =
-    loadXml(spark, new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8),
-      tables)
 
   def bindXml(spark: SparkSession, parsed: MondrianXml.XmlCatalog,
       tables: Map[String, DataFrame]): CubeCatalog = {

@@ -271,7 +271,6 @@ object ScaleSweep {
     // their sources are replica-0 ids 0..P-1
     val plantedBase = emb.agg(max("vec_id")).head.getLong(0) -
       PlantedPairs + 1
-    val baseStride = plantedBase / factor
     val bitsAuto = Dedup.suggestedLshBits(n)
     val tablesAuto = Dedup.suggestedLshTables(bitsAuto, Threshold)
     val nlistAuto = Similarity.suggestedIvfLists(n)

@@ -376,15 +376,16 @@ class ApiSpec extends AnyFunSuite {
 
   test("flush releases executor cache pinned by the catalog") {
     val cat = CubeCatalog.forDir(spark, SparkTestSession.sf)
-    val probe = cat.cachedMemberFrame(("sales", "__flush_probe", false)) {
-      spark.range(5).toDF("id")
+    val probe = cat.memo(CubeCatalog.MemberFrame)((
+        "sales", "__flush_probe", false)) {
+      spark.range(5).toDF("id").persist()
     }
     probe.count()
     assert(probe.storageLevel.useMemory) // pinned while the catalog lives
     val (code, _) = get("/flush?secret=s3cret")
     assert(code == 200)
     assert(probe.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-      "flush must unpersist member frames, not just drop the TrieMap")
+      "flush must unpersist member frames, not just drop the memo table")
   }
 
   test("nest utility groups driver-side collections (C7)") {
